@@ -1,12 +1,13 @@
 #!/usr/bin/env python3
 """Benchmark entry point.
 
-    python3 perfbench/run.py --workload spread_batch --seed 1 --seconds 20 --trace 0
+    python3 perfbench/run.py --workload spread_batch --seed 1 --seconds 8 --trace 0
 
 Generates the workload's inputs from ``--seed``, starts one Spark
 session on ``local[<cores>]``, does the set-up (including one unmeasured
 warm-up operation), then runs operations for ``--seconds`` seconds and
-checks every output. The last line of standard output is one JSON
+checks every output. ``--seconds`` defaults to ``run_seconds`` in
+BENCHMARK.json. The last line of standard output is one JSON
 object: ``correct``, ``attempted``, ``failed`` and ``metrics`` (the
 end-to-end metrics with ``--trace 0``, the per-layer metrics with
 ``--trace 1``). Run records and span files go to ``.perfbench/records``.
@@ -29,7 +30,9 @@ import threading
 import time
 
 ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-GEN_REPS = 3
+#: a run measures at least this many operations, so that its median is
+#: the middle one and neither a slow first operation nor one stall sets it
+MIN_OPS = 3
 
 END_TO_END = {
     "setup_s": "s",
@@ -206,32 +209,15 @@ def peak_rss_mb() -> float:
 # --- one workload run -------------------------------------------------------------
 
 
-def _generate(wl, data_root: str, seed: int) -> tuple[str, float, str]:
-    """Generate the inputs GEN_REPS times; all copies must hash equal.
-    Returns (data dir, median generation seconds, content hash)."""
+def _generate(wl, data_dir: str, seed: int) -> tuple[float, str]:
+    """Generate the inputs once. Returns (generation seconds, content
+    hash). perfbench/tests checks that generation is byte-deterministic."""
     from perfbench.inputs import content_hash
 
-    times, hashes, dirs = [], [], []
-    for r in range(GEN_REPS):
-        d = os.path.join(data_root, f"gen{r}")
-        shutil.rmtree(d, ignore_errors=True)
-        t0 = time.perf_counter()
-        wl.generate(d, seed)
-        times.append(time.perf_counter() - t0)
-        hashes.append(content_hash(d))
-        dirs.append(d)
-    if len(set(hashes)) != 1:
-        raise RuntimeError(f"input generation is not deterministic: {hashes}")
-    for d in dirs[1:]:
-        shutil.rmtree(d)
-    return dirs[0], statistics.median(times), hashes[0]
-
-
-def _assert_nothing_cached(spark) -> None:
-    spark.catalog.clearCache()
-    n = spark.sparkContext._jsc.sc().getPersistentRDDs().size()
-    if n:
-        raise RuntimeError(f"{n} RDDs still persisted after clearCache()")
+    shutil.rmtree(data_dir, ignore_errors=True)
+    t0 = time.perf_counter()
+    wl.generate(data_dir, seed)
+    return time.perf_counter() - t0, content_hash(data_dir)
 
 
 def _load_table_patches(tracer):
@@ -252,24 +238,31 @@ def _load_table_patches(tracer):
 def _measure(spark, wl, seconds: float, tracer) -> list[dict]:
     """Closed loop: ``wl.clients`` clients each start their next
     operation when the previous one (and its check) is done, until the
-    deadline. Returns one record per operation."""
+    deadline has passed and at least MIN_OPS operations have started.
+    Returns one record per operation: its client, its time,
+    its end (seconds since the loop started) and its outcome."""
+    from perfbench.workloads import assert_nothing_cached
+
     ids = itertools.count(1)
     lock = threading.Lock()
     ops: list[dict] = []
     errors: list[BaseException] = []
-    deadline = time.perf_counter() + seconds
+    start = time.perf_counter()
+    deadline = start + seconds
 
-    def client() -> None:
+    def client(k: int) -> None:
         try:
-            loop()
+            loop(k)
         except BaseException as ex:  # re-raised in the main thread after join
             errors.append(ex)
 
-    def loop() -> None:
-        while time.perf_counter() < deadline:
+    def loop(k: int) -> None:
+        while True:
             with lock:
                 i = next(ids)
-            _assert_nothing_cached(spark)
+            if i > MIN_OPS and time.perf_counter() >= deadline:
+                return
+            assert_nothing_cached(spark)
             err = None
             t0 = time.perf_counter()
             try:
@@ -281,7 +274,7 @@ def _measure(spark, wl, seconds: float, tracer) -> list[dict]:
                     result = wl.op(i)
             except Exception as ex:  # noqa: BLE001 - a failed operation is counted, not fatal
                 err = f"{type(ex).__name__}: {ex}"
-            dt = time.perf_counter() - t0
+            t1 = time.perf_counter()
             if err is None:
                 try:
                     outcome = wl.check(i, result)
@@ -291,9 +284,9 @@ def _measure(spark, wl, seconds: float, tracer) -> list[dict]:
             else:
                 ok, detail = False, err
             with lock:
-                ops.append({"i": i, "s": dt, "ok": ok, "detail": detail})
+                ops.append({"i": i, "client": k, "s": t1 - t0, "end": t1 - start, "ok": ok, "detail": detail})
 
-    threads = [threading.Thread(target=client, name=f"client{k}") for k in range(wl.clients)]
+    threads = [threading.Thread(target=client, args=(k,), name=f"client{k}") for k in range(wl.clients)]
     for t in threads:
         t.start()
     for t in threads:
@@ -305,10 +298,20 @@ def _measure(spark, wl, seconds: float, tracer) -> list[dict]:
 
 def end_to_end(wl, ops: list[dict], setup_s: float) -> dict[str, float]:
     job_s = statistics.median(o["s"] for o in ops)
+    if wl.rows_per_op is None:
+        # closed loop: each client's correct completions over its busy
+        # span (loop start to its own last completion), summed over
+        # clients, so a client idle after its last request does not count
+        rate = 0.0
+        for k in {o["client"] for o in ops}:
+            mine = [o for o in ops if o["client"] == k]
+            rate += sum(o["ok"] for o in mine) / max(o["end"] for o in mine)
+    else:
+        rate = wl.rows_per_op / job_s
     return {
         "setup_s": setup_s,
         "job_s": job_s,
-        "rows_per_s": wl.rows_per_op * wl.clients / job_s,
+        "rows_per_s": rate,
         "ok_frac": sum(o["ok"] for o in ops) / len(ops),
         "peak_rss_mb": peak_rss_mb(),
     }
@@ -365,7 +368,8 @@ def run_workload(spark, session_s: float, work: dict, name: str, scale: str, see
     from perfbench.workloads import WORKLOADS
 
     wl = WORKLOADS[name](scale)
-    data_dir, gen_s, digest = _generate(wl, os.path.join(work["data"], name), seed)
+    data_dir = os.path.join(work["data"], name)
+    gen_s, digest = _generate(wl, data_dir, seed)
     tracer = Tracer(spark, cores()) if trace else None
     if tracer is not None:
         tracer.record("session.get_spark", session_s)
@@ -436,23 +440,25 @@ def selftest(seed: int) -> int:
         print("selftest: BENCHMARK.json workloads differ from run.py", file=sys.stderr)
         return 1
     work = make_work_dir("selftest")
-    spark, session_s = start_spark(work)
     bad = 0
     try:
-        for name in WORKLOADS:
-            for trace in (False, True):
-                result, record = run_workload(spark, session_s, work, name, "tiny", seed, 1.0, trace)
-                want = want_layer if trace else want_e2e
-                got = {k: v["unit"] for k, v in result["metrics"].items()}
-                ok = result["correct"] and got == want
-                if trace:
-                    with open(record["spans_file"]) as f:
-                        names = {json.loads(line)["name"] for line in f}
-                    ok = ok and set(WORKLOADS[name].spans) <= names
-                print(f"selftest {name} trace={int(trace)}: {'ok' if ok else 'FAIL'} {json.dumps(result)[:300]}")
-                bad += not ok
+        spark, session_s = start_spark(work)
+        try:
+            for name in WORKLOADS:
+                for trace in (False, True):
+                    result, record = run_workload(spark, session_s, work, name, "tiny", seed, 1.0, trace)
+                    want = want_layer if trace else want_e2e
+                    got = {k: v["unit"] for k, v in result["metrics"].items()}
+                    ok = result["correct"] and got == want
+                    if trace:
+                        with open(record["spans_file"]) as f:
+                            names = {json.loads(line)["name"] for line in f}
+                        ok = ok and set(WORKLOADS[name].spans) <= names
+                    print(f"selftest {name} trace={int(trace)}: {'ok' if ok else 'FAIL'} {json.dumps(result)[:300]}")
+                    bad += not ok
+        finally:
+            stop_spark(spark)
     finally:
-        stop_spark(spark)
         shutil.rmtree(work["base"], ignore_errors=True)
     return 1 if bad else 0
 
@@ -461,9 +467,8 @@ def main(argv=None) -> int:
     p = argparse.ArgumentParser(description=__doc__.split("\n\n")[0])
     p.add_argument("--workload")
     p.add_argument("--seed", type=int, default=1)
-    p.add_argument("--seconds", type=float, default=20.0)
+    p.add_argument("--seconds", type=float)
     p.add_argument("--trace", type=int, choices=(0, 1), default=0)
-    p.add_argument("--scale", choices=("full", "tiny"), default="full")
     p.add_argument("--selftest", action="store_true")
     args = p.parse_args(argv)
 
@@ -479,14 +484,19 @@ def main(argv=None) -> int:
         return selftest(args.seed)
     if args.workload not in WORKLOADS:
         p.error(f"--workload must be one of {sorted(WORKLOADS)}")
+    if args.seconds is None:
+        with open(os.path.join(ROOT, "BENCHMARK.json")) as f:
+            args.seconds = float(json.load(f)["run_seconds"])
     work = make_work_dir(f"{args.workload}-seed{args.seed}")
-    spark, session_s = start_spark(work)
     try:
-        result, record = run_workload(
-            spark, session_s, work, args.workload, args.scale, args.seed, args.seconds, bool(args.trace)
-        )
+        spark, session_s = start_spark(work)
+        try:
+            result, record = run_workload(
+                spark, session_s, work, args.workload, "full", args.seed, args.seconds, bool(args.trace)
+            )
+        finally:
+            stop_spark(spark)
     finally:
-        stop_spark(spark)
         shutil.rmtree(work["base"], ignore_errors=True)
     print(f"perfbench: inputs sha256 {record['input_sha256']}", file=sys.stderr)
     for d in record["failures"]:
